@@ -303,8 +303,11 @@ def lsh_topk_with_index(
     """ANN top-k for the first ``n_queries`` corpus vectors against the
     persisted LSH hash tables — s02's exact query plan over the loaded
     frame (shared ``_lsh_probe``), so results are row-identical to the
-    fresh build (pinned by tests/test_indexing.py)."""
+    fresh build (pinned by tests/test_indexing.py). Any number of probes
+    may be asked for, so the output is unbounded and takes a range sort."""
     from final_project_big_data_spark.queries.similarity import _lsh_probe
 
     signed = spark.read.parquet(os.path.join(path, "tables"))
-    return _lsh_probe(signed.filter(F.col("vec_id") < n_queries), signed)
+    return _lsh_probe(
+        signed.filter(F.col("vec_id") < n_queries), signed
+    ).orderBy("query_id", "rank")

@@ -15,6 +15,12 @@ sort-key columns.
 
 At 100 TB the effect is larger, not smaller: the sampling pass scans the
 full input, so anything above the scan runs at full-data cost twice.
+
+The same rule applies to Python kernels (``applyInPandas``/``applyInArrow``/
+``mapInPandas``): a range sort placed directly on a kernel re-runs the
+kernel to sample its bounds. Put an exchange between them (d06 hashes the
+kernel output on its first sort key, so the sampler reads that shuffle),
+or use ``tiny_sorted`` when the output is bounded (s01, s02).
 """
 
 from __future__ import annotations

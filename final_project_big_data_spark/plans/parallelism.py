@@ -29,6 +29,14 @@ def widen(df: DataFrame) -> DataFrame:
     only under ``local[...]`` (bare-scan planning, cheap, no job), where
     single-file fixtures genuinely collapse to one task. Override with
     ``spark.finalproject.widen=off|force``.
+
+    The exchange does not fence off filters: Catalyst pushes deterministic
+    filters — including ``isnotnull`` ones it infers from join keys —
+    below the round-robin exchange into the narrow scan, so an expensive
+    expression inside such a filter runs single-task there, and again
+    above the exchange. Keep expensive join keys provably non-null (s02's
+    signature) and keep row guards out of the pipeline where a kernel can
+    apply them (``block_pair_cosine``).
     """
     spark = df.sparkSession
     mode = str(spark.conf.get("spark.finalproject.widen", "auto"))

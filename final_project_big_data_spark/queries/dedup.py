@@ -508,24 +508,30 @@ def d06(spark: SparkSession, sf: str) -> DataFrame:
         pair_kernel,
     )
 
-    dot = dot_fold  # shared sequential fold (see operators/vector.py)
-
-    # norms once per row, not per pair (HOFs are interpreted — 3× cheaper)
-    e = widen(load_table(spark, sf, "embeddings")).select(
-        "vec_id",
-        "label",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-    )
-    # zero-norm vectors never pair (engine contract — ANSI mode would
-    # abort the divide; same WHERE nv > 0 guard in the oracle)
-    e = e.withColumn("nv", F.sqrt(dot(F.col("v"), F.col("v")))).filter(
-        F.col("nv") > 0
-    )
     if pair_kernel(sf) == "np":
-        # round-8 vectorized pair stage (operators/vector.py): identical
-        # floats/fold order to the join shape, bit parity by construction
-        pairs = block_pair_cosine(e, "label", mode="lt", tau=0.3)
+        # vectorized pair stage (operators/vector.py): identical floats and
+        # fold order to the join shape, bit parity by construction; the
+        # kernel reads the raw float column and applies the nv > 0 guard
+        # itself, so the scan feeds the label exchange directly. The hash
+        # exchange on id_a makes the final range sort sample that shuffle
+        # instead of re-running the kernel for its bounds
+        # (plans/ordering.py)
+        pairs = block_pair_cosine(
+            load_table(spark, sf, "embeddings"), "label", mode="lt", tau=0.3
+        ).repartition("id_a")
     else:
+        dot = dot_fold  # shared sequential fold (see operators/vector.py)
+        # norms once per row, not per pair (HOFs are interpreted — 3× cheaper)
+        e = widen(load_table(spark, sf, "embeddings")).select(
+            "vec_id",
+            "label",
+            F.transform("embedding", lambda x: x.cast("double")).alias("v"),
+        )
+        # zero-norm vectors never pair (engine contract — ANSI mode would
+        # abort the divide; same WHERE nv > 0 guard in the oracle)
+        e = e.withColumn("nv", F.sqrt(dot(F.col("v"), F.col("v")))).filter(
+            F.col("nv") > 0
+        )
         a = e.alias("a")
         b = e.alias("b")
         cos = dot(F.col("a.v"), F.col("b.v")) / (F.col("a.nv") * F.col("b.nv"))

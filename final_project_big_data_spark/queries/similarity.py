@@ -233,11 +233,25 @@ def _sign_vectors(e: DataFrame) -> DataFrame:
     makes the persisted LSH index APPENDABLE: signing a new batch in a
     later job lands it in exactly the buckets a from-scratch rebuild
     would pick (``append_to_lsh_index``; append(A,B) == fresh(A∪B) is
-    oracle-checked by s08)."""
+    oracle-checked by s08).
+
+    The planes are ONE SQL array literal of exact double literals
+    (``repr`` round-trips a float, the ``D`` suffix keeps it a double),
+    not one py4j ``lit`` call per element. The signature is wrapped in a
+    ``coalesce(·, 0)`` that never fires — every plane bit is
+    ``when(...).otherwise(0)``, so a NULL vector already signs to bucket
+    0, as in DuckDB — but makes ``bucket`` provably non-null. Otherwise
+    Catalyst infers ``isnotnull(bucket)`` from the bucket equi-join and
+    pushes the whole interpreted signature below ``widen``'s exchange,
+    computing it once more in the single scan task."""
     dim = 64
     planes = _hyperplanes(dim, _N_PLANES, _LSH_SEED)
-    plane_lits = F.array(
-        *[F.array(*[F.lit(x) for x in row]) for row in planes]
+    plane_lits = F.expr(
+        "array("
+        + ", ".join(
+            "array(" + ", ".join(f"{x!r}D" for x in row) + ")" for row in planes
+        )
+        + ")"
     )
     sig = F.aggregate(
         F.transform(
@@ -247,7 +261,7 @@ def _sign_vectors(e: DataFrame) -> DataFrame:
         F.lit(0),
         lambda acc, bit: acc * 2 + bit,
     )
-    return e.withColumn("bucket", sig).withColumn(
+    return e.withColumn("bucket", F.coalesce(sig, F.lit(0))).withColumn(
         "nv", F.sqrt(_dot(F.col("v"), F.col("v")))
     )
 
@@ -257,7 +271,8 @@ def _lsh_probe(probes_signed: DataFrame, signed: DataFrame) -> DataFrame:
     path: explode each probe row to its own bucket plus every 1-bit-flip
     neighbor (multiprobe), equi-join the hash table on bucket, exact
     cosine re-rank to top-k. ``probes_signed`` must carry
-    (vec_id, v, nv, bucket)."""
+    (vec_id, v, nv, bucket). Unsorted: each caller sorts by
+    (query_id, rank) as its output size allows (plans/ordering.py)."""
     probes = F.array(
         F.col("bucket"),
         *[
@@ -295,7 +310,6 @@ def _lsh_probe(probes_signed: DataFrame, signed: DataFrame) -> DataFrame:
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= _TOP_K)
         .select("query_id", "neighbor_id", F.round("cs", 4).alias("cos_sim"), "rank")
-        .orderBy("query_id", "rank")
     )
 
 
@@ -313,8 +327,15 @@ def s02(spark: SparkSession, sf: str) -> DataFrame:
     probe stages are shared with the persisted-hash-table deployment
     shape (``operators.ivf_index.save_lsh_index``).
     """
+    from final_project_big_data_spark.plans.ordering import tiny_sorted
+
     signed = _lsh_signed(spark, sf)
-    return _lsh_probe(signed.filter(F.col("vec_id") < _N_QUERIES), signed)
+    # bounded at _N_QUERIES × _TOP_K rows (plans/ordering.py)
+    return tiny_sorted(
+        _lsh_probe(signed.filter(F.col("vec_id") < _N_QUERIES), signed),
+        "query_id",
+        "rank",
+    )
 
 
 # IVF sizing (round 5, found by the guarded 100× sweep): a FIXED centroid
@@ -875,29 +896,30 @@ def s04(spark: SparkSession, sf: str) -> DataFrame:
         pair_kernel,
     )
 
-    e = widen(load_table(spark, sf, "embeddings")).select(
-        "vec_id",
-        "label",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-    )
-    # zero-norm vectors never pair (engine contract — ANSI mode would
-    # abort the divide; same WHERE nv > 0 guard in the oracle)
-    en = e.withColumn("nv", F.sqrt(_dot(F.col("v"), F.col("v")))).filter(
-        F.col("nv") > 0
-    )
     if pair_kernel(sf) == "np":
-        # round-8 vectorized pair stage: the kernel already keeps only
-        # each row's top-k (same cs doubles, same (cs DESC, id ASC)
-        # order), so the JVM window below ranks ≤k rows per vector
-        # instead of the whole block² pair relation
+        # vectorized pair stage: the kernel reads the raw float column,
+        # applies the nv > 0 guard itself and keeps only each row's top-k
+        # (same cs doubles, same (cs DESC, id ASC) order), so the JVM
+        # window below ranks ≤k rows per vector instead of the whole
+        # block² pair relation
         scored = block_pair_cosine(
-            en, "label", mode="topk", k=_KNN_K
+            load_table(spark, sf, "embeddings"), "label", mode="topk", k=_KNN_K
         ).select(
             F.col("id_a").alias("vec_id"),
             F.col("id_b").alias("neighbor_id"),
             "cs",
         )
     else:
+        e = widen(load_table(spark, sf, "embeddings")).select(
+            "vec_id",
+            "label",
+            F.transform("embedding", lambda x: x.cast("double")).alias("v"),
+        )
+        # zero-norm vectors never pair (engine contract — ANSI mode would
+        # abort the divide; same WHERE nv > 0 guard in the oracle)
+        en = e.withColumn("nv", F.sqrt(_dot(F.col("v"), F.col("v")))).filter(
+            F.col("nv") > 0
+        )
         a = en.select(
             F.col("vec_id"), F.col("label"), F.col("v"), F.col("nv")
         )
@@ -976,21 +998,23 @@ def d10(spark: SparkSession, sf: str) -> DataFrame:
     )
 
     _, _, assigned, _ = _ivf_assigned(spark, sf)
-    # zero-norm vectors never pair (engine contract — ANSI mode would
-    # abort the divide; same nv > 0 guard in the oracle's pairs CTE)
-    assigned = assigned.filter(F.col("nv") > 0)
     if pair_kernel(sf) == "np":
-        # round-8 vectorized pair stage: same floats, same fold order as
-        # the join shape below (operators/vector.py), pairs filtered
-        # inside the kernel so only survivors cross Arrow back
+        # vectorized pair stage: same floats, same fold order as the join
+        # shape below (operators/vector.py); the kernel applies the
+        # nv > 0 guard itself and filters pairs inside, so only survivors
+        # cross Arrow back
         pairs = block_pair_cosine(
-            assigned.select("vec_id", "v", "nv", "centroid_id"),
+            assigned,
             "centroid_id",
             mode="lt",
             tau=_SEMDEDUP_TAU,
             strict=True,
+            emb_col="v",
         ).select(F.col("id_a").alias("ka"), F.col("id_b").alias("kb"), "cs")
     else:
+        # zero-norm vectors never pair (engine contract — ANSI mode would
+        # abort the divide; same nv > 0 guard in the oracle's pairs CTE)
+        assigned = assigned.filter(F.col("nv") > 0)
         a = assigned.select(
             F.col("vec_id").alias("ka"),
             F.col("v").alias("va"),

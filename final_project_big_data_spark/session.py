@@ -12,7 +12,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -29,6 +28,11 @@ def ship_package(spark: SparkSession) -> None:
     ``final_project_big_data_spark``. On a cluster that's
     ``spark-submit --py-files engine.zip``; here the engine zips itself once
     per session and registers it via ``sc.addPyFile``.
+
+    The zip is written into the context's own SparkFiles root directory
+    (under ``spark.local.dir``), the directory ``addFile`` fetches into
+    and Spark deletes when the context stops — so no copy outlives the
+    session, in ``TMPDIR`` or in the local dirs.
     """
     sc = spark.sparkContext
     if getattr(sc, "_fpbd_pkg_shipped", False):
@@ -36,7 +40,7 @@ def ship_package(spark: SparkSession) -> None:
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     repo_root = os.path.dirname(pkg_dir)
     zip_base = os.path.join(
-        tempfile.gettempdir(), f"fpbd_pkg_{os.getpid()}"
+        sc._jvm.org.apache.spark.SparkFiles.getRootDirectory(), "fpbd_pkg"
     )
     zip_path = shutil.make_archive(
         zip_base, "zip", root_dir=repo_root, base_dir="final_project_big_data_spark"

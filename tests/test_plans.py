@@ -124,6 +124,74 @@ def test_asof_join_single_hash_shuffle(spark, sf_dir):
     assert "NestedLoop" not in p and "CartesianProduct" not in p, p
 
 
+def _tree_lines(spark, name: str, sf_dir: str) -> list[str]:
+    df = SPECS[name].builder(spark, sf_dir)
+    return spark._jvm.org.apache.spark.sql.api.python.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "simple"
+    ).splitlines()
+
+
+def _below(lines: list[str], i: int) -> str:
+    """The subtree under node line ``i`` of a simple-mode plan tree."""
+    indent = lambda s: len(s) - len(s.lstrip(" :|+-"))  # noqa: E731
+    out = []
+    for line in lines[i + 1 :]:
+        if indent(line) <= indent(lines[i]):
+            break
+        out.append(line)
+    return "\n".join(out)
+
+
+def _node(lines: list[str], needle: str) -> int:
+    return next(i for i, line in enumerate(lines) if needle in line)
+
+
+def test_d06_pair_kernel_runs_once_on_the_raw_scan(spark, sf_dir, monkeypatch):
+    """d06's NumPy pair kernel: the final range sort reads a hash shuffle
+    on id_a, not the kernel itself — a range exchange placed directly on
+    the kernel re-runs it to sample its bounds (plans/ordering.py) — and
+    the scan feeds the label exchange with no HOF and no round-robin
+    exchange below the kernel (it computes the norms itself)."""
+    monkeypatch.setenv("SPARK_GRAFT_PAIR_KERNEL", "np")
+    lines = _tree_lines(spark, "d06_embedding_near_dup", sf_dir)
+    p = "\n".join(lines)
+    kern = _node(lines, "FlatMapGroupsIn")
+    rng = _node(lines, "Exchange rangepartitioning")
+    between = "\n".join(lines[rng + 1 : kern])
+    assert "Exchange hashpartitioning(id_a" in between, p
+    below = _below(lines, kern)
+    assert "lambdafunction" not in below, p
+    assert "RoundRobinPartitioning" not in below, p
+
+
+def test_s02_signature_computed_once_and_tiny_sort(spark, sf_dir):
+    """s02: the LSH signature is provably non-null, so no inferred
+    isnotnull(bucket) filter drags the interpreted signature below
+    widen's round-robin exchange into the scan task; the output is
+    bounded at probes × k rows, so it takes tiny_sorted, not a range
+    sort."""
+    lines = _tree_lines(spark, "s02_lsh_ann_topk", sf_dir)
+    p = "\n".join(lines)
+    rr = [i for i, line in enumerate(lines) if "RoundRobinPartitioning" in line]
+    assert rr, p
+    for i in rr:
+        assert "aggregate(" not in _below(lines, i), p
+    assert "rangepartitioning" not in p, p
+
+
+def test_s01_scan_kernel_has_no_python_leaf(spark, sf_dir, monkeypatch):
+    """s01's scan kernel is driven by a JVM Range leaf, one task per row
+    group: no pickled Python RDD (ExistingRDD) and no exchange under the
+    MapInPandas node."""
+    monkeypatch.setenv("SPARK_GRAFT_PAIR_KERNEL", "np")
+    monkeypatch.delenv("SPARK_GRAFT_S01_KERNEL", raising=False)
+    lines = _tree_lines(spark, "s01_cosine_topk", sf_dir)
+    p = "\n".join(lines)
+    below = _below(lines, _node(lines, "MapInPandas"))
+    assert "Range (" in below, p
+    assert "ExistingRDD" not in below and "Exchange" not in below, p
+
+
 @pytest.mark.parametrize(
     "name",
     ["q14_multiway_join", "q22_window_rank", "q41_stats_agg"],

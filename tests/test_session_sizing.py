@@ -47,7 +47,10 @@ def test_largest_table_bytes_missing_dir_is_zero():
 
 def test_shuffle_partitions_scales_with_data(tmp_path):
     _mkparquet(tmp_path, "t", 20 * 1024 * 1024)
-    got = sized_shuffle_partitions(str(tmp_path), advisory_bytes=1024 * 1024)
+    # cores stated: the ceiling (cores × 4) must sit above 20 on any host
+    got = sized_shuffle_partitions(
+        str(tmp_path), advisory_bytes=1024 * 1024, cores=8
+    )
     assert got == 20
     # floor clamp
     assert sized_shuffle_partitions(str(tmp_path), advisory_bytes=1 << 40) == 8

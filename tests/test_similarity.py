@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import math
+
 from final_project_big_data_spark.queries import all_specs
 
 
@@ -283,7 +285,7 @@ def test_pair_kernel_chunked_path_and_edges(spark, sf_dir, monkeypatch):
 
     def run(mode, **kw):
         return sorted(
-            V.block_pair_cosine(df, "label", mode=mode, **kw).collect()
+            V.block_pair_cosine(df, "label", mode=mode, emb_col="v", **kw).collect()
         )
 
     whole_lt = run("lt", tau=-2.0)  # keep every pair
@@ -404,9 +406,13 @@ def test_pair_kernel_null_and_nan_edges(spark, sf_dir):
     key must pair with nothing (the join's equality predicate drops it;
     a raw pandas groupBy would form a NULL group), and a zero-norm
     vector must pair with nothing — the engine contract, because under
-    ANSI mode the join shape's divide ABORTS on a zero norm. Both modes
-    of the NumPy kernel are compared against the live Spark join shape
-    (with the same documented nv > 0 guard the call sites apply)."""
+    ANSI mode the join shape's divide ABORTS on a zero norm. A NULL
+    element nulls the norm, so that vector never pairs either, while a
+    NaN element gives a NaN norm that passes ``nv > 0`` (Spark orders NaN
+    above every number) and NaN cosines that pass any threshold and rank
+    first. Both modes of the NumPy kernel, which applies the guard
+    itself, are compared against the live Spark join shape with the
+    join's nv > 0 guard."""
     from pyspark.sql import Row
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
@@ -421,6 +427,8 @@ def test_pair_kernel_null_and_nan_edges(spark, sf_dir):
         Row(vec_id=5, label=1, v=[0.0, 1.0]),
         Row(vec_id=6, label=1, v=[1.0, 0.0]),
         Row(vec_id=7, label=1, v=[0.8, 0.6]),
+        Row(vec_id=8, label=1, v=[1.0, None]),  # null element -> never pairs
+        Row(vec_id=9, label=1, v=[float("nan"), 1.0]),  # NaN norm -> pairs
     ]
     df = spark.createDataFrame(rows).withColumn(
         "nv", F.sqrt(V.dot_fold(F.col("v"), F.col("v")))
@@ -451,20 +459,28 @@ def test_pair_kernel_null_and_nan_edges(spark, sf_dir):
         return out
 
     def norm(rows_):
-        return sorted((r.id_a, r.id_b, r.cs) for r in rows_)
+        # NaN-aware: a NaN cosine matches a NaN cosine
+        return sorted(
+            (r.id_a, r.id_b, "NaN" if math.isnan(r.cs) else r.cs) for r in rows_
+        )
 
     # mode='lt': the kernel takes the UNguarded df (it applies the guard
     # itself) and must match the guarded join; vec 3 and 4 pair nowhere
     tau = 0.5
-    kern = V.block_pair_cosine(df, "label", mode="lt", tau=tau).collect()
+    kern = V.block_pair_cosine(
+        df, "label", mode="lt", tau=tau, emb_col="v"
+    ).collect()
     join = join_pairs(F.col("id_a") < F.col("id_b"), tau=tau).collect()
     assert norm(kern) == norm(join) and kern
     ids = {i for r in kern for i in (r.id_a, r.id_b)}
     assert 3 not in ids and 4 not in ids
+    assert 8 not in ids and 9 in ids
 
     # mode='topk': same exclusions, ranked output identical
     k = 1
-    kernt = V.block_pair_cosine(df, "label", mode="topk", k=k).collect()
+    kernt = V.block_pair_cosine(
+        df, "label", mode="topk", k=k, emb_col="v"
+    ).collect()
     w = W.partitionBy("id_a").orderBy(F.desc("cs"), F.asc("id_b"))
     joint = (
         join_pairs(F.col("id_a") != F.col("id_b"))
@@ -476,6 +492,7 @@ def test_pair_kernel_null_and_nan_edges(spark, sf_dir):
     assert norm(kernt) == norm(joint) and kernt
     ids_t = {i for r in kernt for i in (r.id_a, r.id_b)}
     assert 3 not in ids_t and 4 not in ids_t
+    assert 8 not in ids_t and 9 in ids_t
 
     # the degenerate parameter combos fail fast, not at executor runtime
     import pytest
