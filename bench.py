@@ -76,6 +76,30 @@ EXTRAS = [
 ]
 
 
+def contract_line(out: dict, limit: int = 1900) -> str:
+    """The last JSON line, kept within ``limit`` chars for tail capture.
+
+    Optional keys are shed in order of least use to a reader of a red
+    bench: ``master``, then ``detail_file``. The failing-query names go
+    last, and only in part: the list keeps its first names plus one
+    ``"+N more"`` entry. The contract core is never shed, and a line that
+    fits is printed as built.
+    """
+    line = json.dumps(out)
+    for k in ("master", "detail_file"):
+        if len(line) <= limit:
+            return line
+        out.pop(k, None)
+        line = json.dumps(out)
+    errors = out.get("error_queries", [])
+    keep = len(errors)
+    while len(line) > limit and keep > 0:
+        keep -= 1
+        out["error_queries"] = errors[:keep] + [f"+{len(errors) - keep} more"]
+        line = json.dumps(out)
+    return line
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -360,15 +384,7 @@ def main() -> None:
     except Exception:  # noqa: BLE001 — the side file must never fail the bench
         pass
     print(json.dumps({"bench_detail": detail}))
-    contract_line = json.dumps(out)
-    if len(contract_line) > 1900:
-        # tail-capture guard: shed optional keys, never the contract core
-        for k in ("error_queries", "detail_file", "master"):
-            out.pop(k, None)
-            contract_line = json.dumps(out)
-            if len(contract_line) <= 1900:
-                break
-    print(contract_line)
+    print(contract_line(out))
     # round-close freshness: the driver records this bench every round, so
     # regenerating docs/FRESHNESS.md here keeps the committed evidence-age
     # table current with the newest CORRECTNESS_r*.json on disk (VERDICT

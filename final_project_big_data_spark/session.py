@@ -313,6 +313,10 @@ def get_spark(
         except ValueError:
             shuffle_partitions = 32
 
+    # one answer to "is this a single-JVM local master?": local-cluster[n,c,m]
+    # runs separate executor JVMs fetching shuffle through netty, so it
+    # takes every cluster default below, like a real cluster submitter
+    single_jvm = master.startswith("local") and not master.startswith("local-cluster")
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -344,7 +348,7 @@ def get_spark(
             "spark.sql.adaptive.advisoryPartitionSizeInBytes",
             os.environ.get(
                 "SPARK_GRAFT_ADVISORY_BYTES",
-                str(1024 * 1024) if master.startswith("local") else str(64 * 1024 * 1024),
+                str(1024 * 1024) if single_jvm else str(64 * 1024 * 1024),
             ),
         )
         # whole-stage-codegen class cache (STATIC conf, default 100
@@ -382,17 +386,13 @@ def get_spark(
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    if master.startswith("local") and not master.startswith("local-cluster"):
+    if single_jvm:
         # Single-machine posture: shuffle blocks live in page cache/tmpfs,
         # so codec CPU is pure overhead — skip it. On a cluster, shuffle
         # crosses the network: keep the default lz4 (these confs are only
         # set for local masters, so a cluster submitter inherits defaults).
-        # local-cluster[n,c,m] takes the CLUSTER path (round 13): its
-        # executors are separate JVMs fetching shuffle through netty, so
-        # compression, SMJ preference and local-dir defaults should match
-        # what a real cluster submitter would inherit — this is also what
-        # lets the network-gated plan branches be validated end-to-end on
-        # one host (VERDICT r12 #3/#4).
+        # local-cluster taking the cluster path is also what lets the
+        # network-gated plan branches be validated end-to-end on one host.
         builder = (
             builder.config("spark.shuffle.compress", "false")
             .config("spark.shuffle.spill.compress", "false")
@@ -425,6 +425,31 @@ def get_spark(
             # 32 tasks x 1 MiB) they OOM'd an 8 GiB heap. Reverted to
             # defaults; only knobs that survive fresh-process A/B at
             # more than noise belong here.
+            #
+            # Streaming checkpoint writes go through Hadoop FileSystem, not
+            # Spark's default FileContext manager. Every checkpoint file
+            # (state-store delta, offset/commit log entry) is written to a
+            # temp file and renamed into place. On ``file:``,
+            # FileContext.rename is AbstractFileSystem.renameInternal, whose
+            # check-then-rename calls getFileLinkStatus on source and
+            # destination (and again for each .crc), and each of those runs
+            # FileUtil.readLink, which launches the ``readlink`` binary: a
+            # child process per call, ~190 per 10-file micro-batch of the
+            # dedup stream. The FileSystem manager does the same
+            # check-then-rename with exists() + File.renameTo and no link
+            # resolution. The guarantee is unchanged: on a local FS both
+            # managers rename non-atomically after an existence check, the
+            # on-disk layout is the same (N.delta, Spark's checksum file,
+            # Hadoop's .crc files), and a checkpoint written under the
+            # default manager restarts under this one. Checkpoint checksums
+            # and state-store commit validation stay at Spark's defaults
+            # (on). Local-only: on HDFS FileContext's overwriting rename is
+            # atomic, which is why Spark defaults to it.
+            .config(
+                "spark.sql.streaming.checkpointFileManagerClass",
+                "org.apache.spark.sql.execution.streaming.checkpointing."
+                "FileSystemBasedCheckpointFileManager",
+            )
         )
         if os.path.isdir("/dev/shm"):
             shm = os.path.join("/dev/shm", f"spark-local-{os.getuid()}")

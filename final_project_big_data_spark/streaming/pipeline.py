@@ -22,7 +22,9 @@ Scale note: AQE is auto-disabled for stateful streaming, so
 ``spark.sql.shuffle.partitions`` must be sized explicitly *before the first
 checkpoint* — the state-store partition count freezes there. The engine's
 session factory pins it; a default-200 session pays 200-task micro-batches
-forever.
+forever. On local masters the factory also pins Spark's FileSystem-based
+checkpoint manager, so state and offset-log commits launch no ``readlink``
+process per rename; the reason is stated in ``session.get_spark``.
 """
 
 from __future__ import annotations

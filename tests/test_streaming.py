@@ -7,6 +7,7 @@ same rows as a batch frame. The batch result is the oracle.
 
 from __future__ import annotations
 
+import json
 import os
 import time
 
@@ -448,3 +449,121 @@ def test_kafka_e2e_lane(spark, sf_dir):
     got = sorted(r.value for r in back.collect())
     want = sorted(r.value for r in env.collect())
     assert got[-len(want):] == want or set(want) <= set(got)
+
+
+# ------------------------------------------------ checkpoint file manager
+
+_CKPT_PKG = "org.apache.spark.sql.execution.streaming.checkpointing."
+_CKPT_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def _checkpoint_manager(spark, path: str) -> str:
+    """Class of the manager Spark picks for ``path`` under this session."""
+    jvm = spark._jvm
+    mgr = getattr(jvm, _CKPT_PKG + "CheckpointFileManager").create(
+        jvm.org.apache.hadoop.fs.Path(path),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    return mgr.getClass().getName()
+
+
+def _json_replay(spark, replay_path: str, out: str, batches) -> str:
+    """JSON-lines copies of the replay batches, each in its own subdir.
+    Every batch but the first repeats the last 10 events of the batch
+    before it: duplicates inside the dedup watermark."""
+    for i in batches:
+        df = spark.read.parquet(os.path.join(replay_path, f"batch_{i}"))
+        if i > 0:
+            prev = spark.read.parquet(os.path.join(replay_path, f"batch_{i - 1}"))
+            df = df.unionByName(prev.orderBy(F.desc("ts"), F.desc("event_id")).limit(10))
+        P.encode_json(df).coalesce(1).write.text(os.path.join(out, f"batch_{i}"))
+    return out
+
+
+def _dedup_drain(spark, src: str, sink: str, ckpt: str) -> None:
+    """The scoring stream (parse → dedup → score → parquet sink), one
+    micro-batch per file, drained to the end of ``src``. The watermark
+    spans the fixture's repeats (~1.4 events an hour), so every repeat is
+    dropped by dedup state, not as late data."""
+    raw = (
+        spark.readStream.schema("value STRING")
+        .option("maxFilesPerTrigger", 1)
+        .option("recursiveFileLookup", "true")
+        .text(src)
+    )
+    q = (
+        P.score_events(P.dedup_stream(P.parse_json_stream(raw), watermark="7 days"))
+        .writeStream.format("parquet")
+        .option("path", sink)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+
+def test_local_checkpoints_use_filesystem_manager(spark, tmp_path):
+    """Local sessions write checkpoints through Hadoop FileSystem: the
+    FileContext manager's rename launches a ``readlink`` process per
+    link-status call on ``file:`` (see ``session.get_spark``)."""
+    assert _checkpoint_manager(spark, str(tmp_path)) == (
+        _CKPT_PKG + "FileSystemBasedCheckpointFileManager"
+    )
+
+
+def test_dedup_state_versions_keep_every_checksum(spark, replay_path, tmp_path):
+    """Every committed state version in every partition keeps its delta,
+    Spark's checkpoint checksum file and Hadoop's .crc: the manager pin
+    trades no check away."""
+    src = _json_replay(spark, replay_path, str(tmp_path / "src"), (0, 1))
+    ckpt = str(tmp_path / "ckpt")
+    _dedup_drain(spark, src, str(tmp_path / "sink"), ckpt)
+
+    batches = sorted(int(f) for f in os.listdir(os.path.join(ckpt, "commits")) if f.isdigit())
+    assert batches[:2] == [0, 1]  # one per file, then any no-data batch
+    with open(os.path.join(ckpt, "offsets", "0")) as f:
+        conf = json.loads(f.read().splitlines()[1])["conf"]
+    parts = os.path.join(ckpt, "state", "0")
+    part_dirs = [d for d in os.listdir(parts) if d.isdigit()]
+    assert len(part_dirs) == int(conf["spark.sql.shuffle.partitions"])
+    for d in part_dirs:
+        files = set(os.listdir(os.path.join(parts, d)))
+        for b in batches:
+            v = b + 1  # state version committed by batch b
+            # the delta, Spark's checksum file, Hadoop's .crc of each
+            want = {f"{v}.delta", f"{v}.delta.crc", f".{v}.delta.crc", f".{v}.delta.crc.crc"}
+            assert want <= files, (d, v, sorted(files))
+
+
+def test_filecontext_checkpoint_restarts_exactly_once(spark, replay_path, tmp_path):
+    """A checkpoint written by Spark's default FileContext manager restarts
+    under the pinned FileSystem manager: the sink holds every event of the
+    batch recompute exactly once."""
+    src = str(tmp_path / "src")
+    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
+    pinned = spark.conf.get(_CKPT_CONF)
+    _json_replay(spark, replay_path, src, (0, 1))
+    spark.conf.set(_CKPT_CONF, _CKPT_PKG + "FileContextBasedCheckpointFileManager")
+    try:
+        assert _checkpoint_manager(spark, ckpt).endswith("FileContextBasedCheckpointFileManager")
+        _dedup_drain(spark, src, sink, ckpt)  # run 1: default manager
+    finally:
+        spark.conf.set(_CKPT_CONF, pinned)
+    first = spark.read.parquet(sink).count()
+    _json_replay(spark, replay_path, str(tmp_path / "more"), (2, 3))
+    for i in (2, 3):
+        os.rename(str(tmp_path / "more" / f"batch_{i}"), os.path.join(src, f"batch_{i}"))
+    _dedup_drain(spark, src, sink, ckpt)  # run 2: restores state under the pin
+
+    got = spark.read.parquet(sink)
+    want = P.score_events(
+        P.parse_json_stream(spark.read.option("recursiveFileLookup", "true").text(src))
+        .dropDuplicates(["event_id"])
+    )
+    # the benchmark's output check: rows on one side only, plus event ids
+    # the sink holds more than once
+    assert 0 < first < got.count()
+    assert got.subtract(want).count() == 0
+    assert want.subtract(got).count() == 0
+    assert got.groupBy("event_id").count().filter("count > 1").count() == 0
